@@ -16,16 +16,18 @@ import graft.Tables
   * Artifacts are plain parquet (no custom serialization — readable by
   * any engine, survivable across Spark versions, diffable):
   *   bpe_merges/    (step, lft, rgt, merged, freq)   — the tok3 table
-  *   bpe_subs/      (wd, n_sub)                      — vocabulary-sized
+  *   bpe_subs/      (wd, n_sub)                      — vocabulary-sized,
+  *                  collected on load like the in-process trainer's table
   *   ivf_meta/      one row: training confs + corpus fingerprint + regime
   *   ivf_centroids/ (cell, c: array<bigint>)         — flat: K×64 grid longs
   *   ivf_coarse/    (cell1, c: array<bigint>)        — two-level: K1 coarse
   *   ivf_fine/      (cell1, mat: array<array<double>>) — two-level fine
   *                  matrix, a DISTRIBUTED table written distributed
-  *                  (the `bpe_subs` pattern — never collected)
+  *                  (never collected)
   *   pq_books/      (s, p, c: array<bigint>)         — 8×16 codebooks
   * Everything driver-held is model-sized by the registries' own
-  * arguments; `bpe_subs` and `ivf_fine` are the distributed tables.
+  * arguments (`bpe_subs` is vocabulary-sized, the BPE trainer's
+  * driver-memory limit); `ivf_fine` is the distributed table.
   * Both IVF regimes persist — at 100 TB two-level is the ONLY regime,
   * so the fine model exports as parquet rather than refusing.
   *

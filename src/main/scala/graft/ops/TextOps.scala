@@ -2,7 +2,10 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.Tables
+import graft.functions.BpeMerge
 
 /** Text-analysis operators for a large-scale training-data pipeline,
   * over the `documents` table: language ID (stopword-marker heuristic),
@@ -567,18 +570,18 @@ object TextOps {
     * 10k-50k merges; 8 keeps the unrolled DuckDB oracle (one CTE block
     * per merge step) readable while exercising every distinct shape the
     * loop has — including overlapping-pair greediness once a merged
-    * symbol can pair with itself. The machinery is count-independent:
-    * each step is the same one aggregate + one narrow map whatever the
-    * step number. */
+    * symbol can pair with itself. The trainer is count-independent:
+    * each step is one pass over the in-memory word table, and no step
+    * starts a Spark job. */
   private val BPE_MERGES = 8
 
   /** The distinct-word frequency table that BPE training actually runs
     * on — the standard trick (Sennrich et al. 2016, learn_bpe) that
     * makes the iterative loop corpus-size-independent: the corpus is
-    * scanned ONCE for word counts; every merge iteration then works on
+    * scanned ONCE for word counts, and every merge step then works on
     * the vocabulary-sized (word, cnt, symbols) table, never the corpus.
-    * Initial symbols are the word's characters (split-empty keeps no
-    * empty strings). */
+    * Initial symbols are the word's characters (Spark splits by code
+    * point; split-empty keeps no empty strings). */
   private def bpeInitialWords(spark: SparkSession, dir: String): DataFrame =
     docs(spark, dir).select(explode(words).as("wd"))
       .groupBy(col("wd")).agg(count(lit(1)).as("cnt"))
@@ -606,24 +609,67 @@ object TextOps {
     // the HOF form itself. Callers register GraftFunctions.
     call_function("bpe_merge", syms, lit(l), lit(r))
 
-  /** The shared trainer: BPE_MERGES frequency-ranked pair merges.
-    * Each iteration: one pair-count aggregate over the DISTINCT-WORD
-    * table (pairs weighted by word frequency — all adjacent positions
-    * count, the reference's statistic), a 1-ROW collect of the winner
-    * (freq DESC, then (l, r) lexicographic — the engine-neutral
-    * tie-break), then the merge fold as a narrow map. Driver state is
-    * BPE_MERGES winner rows — model state, not data. At 100 TB the
-    * word table is web-vocabulary-sized (~10⁸ rows worst case), so
-    * every per-iteration job is a small shuffle of (l, r, cnt) triples;
-    * the corpus itself is touched exactly once, in
-    * [[bpeInitialWords]]'s word-count aggregate. */
+  /** The shared trainer: BPE_MERGES frequency-ranked pair merges, run
+    * in driver memory over the distinct-word table that
+    * [[bpeInitialWords]] computes in one Spark pass and this collects
+    * once. Each step counts every adjacent pair weighted by its word's
+    * count (all positions count, the reference's statistic), picks the
+    * winner by freq DESC, then (l, r) in UTF-8 byte order
+    * ([[Exact.utf8Order]] — the order of Spark's orderBy and of the
+    * DuckDB oracle; Scala's default String order differs past the
+    * BMP), and applies it with [[graft.functions.BpeMerge.compute]],
+    * the code the `bpe_merge` expression runs for tok4's encode path
+    * and the streaming leg. Returns the merge table and each word's
+    * final subtoken count.
+    *
+    * Limit: the distinct-word table must fit in driver memory — the
+    * limit of in-memory trainers such as learn_bpe, and one tok4
+    * already accepts by broadcasting the same vocabulary-sized table.
+    * The corpus itself is read exactly once. */
+  private def trainMerges(spark: SparkSession, dir: String)
+      : (Seq[(Long, String, String, String, Long)], Seq[(String, Long)]) = {
+    val wt = bpeInitialWords(spark, dir).collect()
+    val cnts = wt.map(_.getLong(1))
+    val syms: Array[ArrayData] = wt.map(r =>
+      new GenericArrayData(r.getSeq[String](2).map(UTF8String.fromString).toArray[Any]))
+    val winnerOrder = Ordering.Tuple3(Ordering.Long.reverse, Exact.utf8Order, Exact.utf8Order)
+    val merges = scala.collection.mutable.ArrayBuffer
+      .empty[(Long, String, String, String, Long)]
+    var step = 1
+    var exhausted = false
+    while (step <= BPE_MERGES && !exhausted) {
+      val freq = scala.collection.mutable.HashMap.empty[(String, String), Long]
+      for (w <- syms.indices; i <- 0 until syms(w).numElements() - 1) {
+        val p = (syms(w).getUTF8String(i).toString, syms(w).getUTF8String(i + 1).toString)
+        freq(p) = freq.getOrElse(p, 0L) + cnts(w)
+      }
+      if (freq.isEmpty) exhausted = true // every word is one symbol — nothing left to merge
+      else {
+        val ((l, r), f) = freq.minBy { case ((l, r), f) => (f, l, r) }(winnerOrder)
+        merges += ((step.toLong, l, r, l + r, f))
+        val (lU, rU, mU) =
+          (UTF8String.fromString(l), UTF8String.fromString(r), UTF8String.fromString(l + r))
+        for (w <- syms.indices) syms(w) = BpeMerge.compute(syms(w), lU, rU, mU)
+        step += 1
+      }
+    }
+    (merges.toSeq, wt.indices.map(w => (wt(w).getString(0), syms(w).numElements().toLong)))
+  }
+
   /** A trained tokenizer model: the merge sequence plus the
-    * vocabulary-sized word→subtoken-count table (persisted). */
+    * vocabulary-sized word→subtoken-count table, held as a local
+    * relation with its cardinality. */
   private final case class BpeModel(
-      dir: String,
       merges: Seq[(Long, String, String, String, Long)],
       subs: DataFrame,
       nSubs: Long)
+
+  private def localModel(spark: SparkSession,
+      merges: Seq[(Long, String, String, String, Long)],
+      subs: Seq[(String, Long)]): BpeModel = {
+    import spark.implicits._
+    BpeModel(merges, subs.toDF("wd", "n_sub"), subs.size.toLong)
+  }
 
   /** Tokenizer-model registry: training happens ONCE per corpus and
     * every encoder reuses the artifact — the deployment shape of every
@@ -634,22 +680,15 @@ object TextOps {
     * training only on a cache miss. Training is fully deterministic,
     * so reuse cannot change any result — the oracle replays the same
     * unrolled merges either way. Memory held is one vocabulary-sized
-    * (word, n_sub) table, model state by the same argument as tok1's
-    * vocab table. The table is persisted HERE, with its cardinality
-    * recorded, so encoders use [[Model.guardedBroadcastKnown]] — the
-    * per-query [[Model.release]] sweep must not evict a registry
-    * table, and no re-count job is needed per encode. */
+    * local (word, n_sub) table per corpus, model state by the same
+    * argument as tok1's vocab table; its cardinality is known, so
+    * encoders use [[Model.guardedBroadcastKnown]] with no count job. */
   private val BpeCacheMax = 4
   private val bpeRegistry =
     new java.util.LinkedHashMap[String, BpeModel](8, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String, BpeModel]): Boolean = {
-        val evict = size() > BpeCacheMax
-        if (evict) {
-          try e.getValue.subs.unpersist(false) catch { case _: Throwable => () }
-        }
-        evict
-      }
+          e: java.util.Map.Entry[String, BpeModel]): Boolean =
+        size() > BpeCacheMax
     }
 
   /** Per-corpus training locks: a registry miss trains under the
@@ -663,34 +702,11 @@ object TextOps {
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   private def register(dir: String, model: BpeModel): Unit =
-    bpeRegistry.synchronized {
-      val prev = bpeRegistry.put(dir, model)
-      // drop a superseded model's cached table (session-matched: a
-      // dead session's unpersist throws and the try absorbs it) —
-      // UNLESS the new model's table is the same semantic plan
-      // (tok3's explicit retrain rebuilds the identical deterministic
-      // table): unpersisting prev would evict the shared cache entry
-      // out from under the model just registered
-      if (prev != null && (prev ne model) &&
-          !prev.subs.queryExecution.analyzed.sameResult(
-            model.subs.queryExecution.analyzed)) {
-        try prev.subs.unpersist(false) catch { case _: Throwable => () }
-      }
-    }
+    bpeRegistry.synchronized { bpeRegistry.put(dir, model); () }
 
   private def trainAndRegister(spark: SparkSession, dir: String): BpeModel = {
-    val (merges, wt, anchored) = trainLoop(spark, dir)
-    val subs = wt
-      .select(col("wd"), size(col("syms")).cast("long").as("n_sub"))
-    // an explicit tok3 retrain rebuilds the same deterministic plan the
-    // registry already holds cached — storageLevel's semantic lookup
-    // skips the re-persist (which would only WARN and double-register)
-    if (subs.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-      subs.persist(); ()
-    }
-    val nSubs = subs.count()
-    anchored.unpersist()
-    val model = BpeModel(dir, merges, subs, nSubs)
+    val (merges, subs) = trainMerges(spark, dir)
+    val model = localModel(spark, merges, subs)
     register(dir, model)
     model
   }
@@ -713,15 +729,10 @@ object TextOps {
     }
   }
 
-  /** test hook: drop every registered tokenizer model (unpersisting
-    * its table), forcing the next call to retrain */
+  /** test hook: drop every registered tokenizer model, forcing the
+    * next call to retrain */
   private[graft] def resetModelRegistry(): Unit =
-    bpeRegistry.synchronized {
-      bpeRegistry.values().forEach { m =>
-        try m.subs.unpersist(false) catch { case _: Throwable => () }
-      }
-      bpeRegistry.clear()
-    }
+    bpeRegistry.synchronized(bpeRegistry.clear())
 
   /** the registered (or trained-on-miss) model's persistable parts —
     * [[graft.ops.ModelStore]]'s export surface */
@@ -732,77 +743,26 @@ object TextOps {
   }
 
   /** install an externally-loaded tokenizer model (the serve-side of
-    * [[graft.ops.ModelStore]]): persist + count its table here, so the
-    * registry's invariants (cardinality known, eviction unpersists)
-    * hold exactly as for a model trained in-process */
+    * [[graft.ops.ModelStore]]): its (wd, n_sub) table is collected into
+    * the same local form a model trained in-process has */
   private[graft] def installBpeModel(dir: String,
       merges: Seq[(Long, String, String, String, Long)],
-      subs: DataFrame): Unit = {
-    val s = subs.persist()
-    val n = s.count()
-    register(dir, BpeModel(dir, merges, s, n))
-  }
-
-  /** Re-materialize the fold chain every this-many merge steps. The
-    * per-step pair aggregate reads the CURRENT symbol table; holding it
-    * as a lazy fold chain over the one persisted word table makes each
-    * iteration ONE job (the aggregate, replaying ≤ CHECKPOINT_EVERY
-    * narrow folds in-scan) instead of two (a persist materialization +
-    * the aggregate) — measured faster at BPE_MERGES=8, where job
-    * latency beats the replayed narrow maps. The periodic persist
-    * exists for the production merge counts (10k-50k): unbounded fold
-    * nesting would blow both the plan and codegen depth, so lineage is
-    * cut every CHECKPOINT_EVERY steps. */
-  private val BPE_CHECKPOINT_EVERY = 8
-
-  private def trainLoop(spark: SparkSession, dir: String)
-      : (Seq[(Long, String, String, String, Long)], DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.registerAll(spark) // bpe_merge
-    val base = bpeInitialWords(spark, dir).persist()
-    base.count()
-    var wt = base
-    var anchored = base // the persisted table the current fold chain hangs off
-    val merges = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, String, String, String, Long)]
-    var step = 1
-    var exhausted = false
-    while (step <= BPE_MERGES && !exhausted) {
-      val top = wt.select(col("cnt"), explode(expr(
-          "transform(slice(syms, 1, size(syms) - 1), " +
-            "(s, i) -> struct(s AS l, element_at(syms, i + 2) AS r))")).as("p"))
-        .select(col("cnt"), col("p.l").as("l"), col("p.r").as("r"))
-        .groupBy(col("l"), col("r")).agg(sum(col("cnt")).as("freq"))
-        .orderBy(col("freq").desc, col("l"), col("r"))
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true // every word is one symbol — nothing left to merge
-      else {
-        val (l, r, f) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += ((step.toLong, l, r, l + r, f))
-        wt = wt.withColumn("syms", bpeMergeFold(col("syms"), l, r))
-        if (step % BPE_CHECKPOINT_EVERY == 0) {
-          val cut = wt.persist()
-          cut.count()
-          anchored.unpersist()
-          anchored = cut
-          wt = cut
-        }
-        step += 1
-      }
-    }
-    // the caller unpersists `anchored` once it has materialized what it
-    // needs from `wt` (which may be a lazy fold chain hanging off it)
-    (merges.toSeq, wt, anchored)
-  }
+      subs: DataFrame): Unit =
+    register(dir, localModel(subs.sparkSession, merges,
+      subs.collect().map(r => (r.getString(0), r.getLong(1))).toSeq))
 
   /** TOK3 — BPE merge TRAINING: the iterative byte-pair-encoding merge
-    * loop every production LLM tokenizer is built from, as a
-    * distributed algorithm. Output is the learned merge table — one
-    * row per step with the merged pair and its frequency at selection
-    * time — which IS the tokenizer model artifact (applying the merges
-    * in step order tokenizes any text). Fully deterministic (integer
-    * counts, lexicographic tie-break), so the whole training loop is
-    * oracle-checkable: the DuckDB twin unrolls all BPE_MERGES
-    * iterations and must reproduce the identical merge sequence. */
+    * loop every production LLM tokenizer is built from. Spark counts
+    * the corpus's distinct words in one pass; the merge steps run on
+    * the driver over that table ([[trainMerges]]), so a call costs the
+    * word count's jobs and none per merge. Output is the learned merge
+    * table — one row per step with the merged pair and its frequency
+    * at selection time — which IS the tokenizer model artifact
+    * (applying the merges in step order tokenizes any text). Fully
+    * deterministic (integer counts, UTF-8 byte-order tie-break), so
+    * the whole training loop is oracle-checkable: the DuckDB twin
+    * unrolls all BPE_MERGES iterations and must reproduce the
+    * identical merge sequence. */
   def tok3BpeTrain(spark: SparkSession, dir: String): DataFrame = {
     val model = trainLocked(spark, dir)
     import spark.implicits._

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{ModelStore, Similarity}
@@ -18,24 +17,6 @@ import graft.ops.{ModelStore, Similarity}
   *     and raising the bound conf re-admits it. */
 class AnnDeltaSpec extends AnyFunSuite {
   import TestSpark._
-
-  private def jobsDuring(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      var prev = -1; var cur = n.get(); var spins = 0
-      while (cur != prev && spins < 50) {
-        Thread.sleep(200); prev = cur; cur = n.get(); spins += 1
-      }
-      cur
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
 
   /** qid -> neighbor list, rank order */
   private def lists(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Long]] =

@@ -1,18 +1,19 @@
 package graft
 
+import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.TextOps
+import graft.ops.{Exact, TextOps}
 
 /** tok3/tok4's BPE pieces, pinned against an independent imperative
   * reference: (1) the merge FOLD (functions.aggregate) must implement
   * greedy left-to-right non-overlapping pair merging — exhaustively
   * checked on every small symbol sequence, including the overlapping
   * [a,a,a,a] class and already-merged multi-char symbols; (2) the whole
-  * distributed training loop must reproduce a plain-Scala reference
-  * trainer's merge sequence on the real corpus (frequency-ranked pairs,
-  * lexicographic tie-break). Cross-engine equality of the same loop is
-  * the DuckDB oracle's job; this spec makes the SEMANTICS the fixed
+  * training loop must reproduce a plain-Scala reference trainer's merge
+  * sequence on the real corpus (frequency-ranked pairs, UTF-8
+  * byte-order tie-break, as Spark's orderBy and DuckDB sort strings).
+  * Cross-engine equality of the same loop is the DuckDB oracle's job; this spec makes the SEMANTICS the fixed
   * point, so Spark and DuckDB can't agree on something that isn't BPE. */
 class BpeSpec extends AnyFunSuite {
   import TestSpark._
@@ -32,9 +33,11 @@ class BpeSpec extends AnyFunSuite {
 
   private def refTrain(words: Map[String, Long], steps: Int)
       : Seq[(String, String, Long)] = {
+    // one symbol per code point, as Spark's split(wd, "")
     var tab = words.toSeq.map { case (w, c) =>
-      (w.split("").filter(_.nonEmpty).toVector, c)
+      (w.codePoints().toArray.map(cp => new String(Character.toChars(cp))).toVector, c)
     }
+    val winnerOrder = Ordering.Tuple3(Ordering.Long.reverse, Exact.utf8Order, Exact.utf8Order)
     val out = Seq.newBuilder[(String, String, Long)]
     var step = 0
     var done = false
@@ -44,7 +47,7 @@ class BpeSpec extends AnyFunSuite {
         pc((syms(i), syms(i + 1))) = pc.getOrElse((syms(i), syms(i + 1)), 0L) + c
       if (pc.isEmpty) done = true
       else {
-        val ((l, r), f) = pc.toSeq.minBy { case ((pl, pr), pf) => (-pf, pl, pr) }
+        val ((l, r), f) = pc.toSeq.minBy { case ((pl, pr), pf) => (pf, pl, pr) }(winnerOrder)
         out += ((l, r, f))
         tab = tab.map { case (s, c) => (refMerge(s, l, r), c) }
         step += 1
@@ -71,6 +74,7 @@ class BpeSpec extends AnyFunSuite {
       }
     } yield seq
     import spark.implicits._
+    graft.functions.GraftFunctions.registerAll(spark) // bpe_merge
     for ((alpha, (l, r)) <- cases) {
       val seqs = rows.filter(_.forall(alpha.contains)).distinct
       val df = seqs.map(v => Tuple1(v)).toDF("syms")
@@ -99,6 +103,31 @@ class BpeSpec extends AnyFunSuite {
     val merged = got.map { case (l, r, _) => l + r }.toSet
     assert(got.exists { case (l, r, _) => merged.contains(l) || merged.contains(r) },
       s"no merge consumed an earlier merge's symbol: $got")
+  }
+
+  test("tok3 breaks frequency ties in UTF-8 byte order, not UTF-16 order") {
+    // (a, U+FF61) and (a, U+1F600) tie at frequency 2: UTF-8 puts
+    // U+FF61 (EF BD A1) first, Scala's default String order puts the
+    // surrogate pair of U+1F600 (D83D DE00) first
+    val (half, emoji) = ("\uFF61", new String(Character.toChars(0x1F600)))
+    assert(Exact.utf8Order.lt(half, emoji) && emoji < half)
+    val dir = Files.createTempDirectory("graft_bpe_tie_").toString
+    import spark.implicits._
+    Seq((0L, s"a$half a$emoji"), (1L, s"a$emoji a$half"))
+      .toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val got = TextOps.tok3BpeTrain(spark, dir).collect()
+      .sortBy(_.getLong(0))
+      .map(r => (r.getString(1), r.getString(2), r.getLong(4))).toSeq
+    assert(got.head == (("a", half, 2L)), s"first merge: $got")
+    assert(got == refTrain(Map(s"a$half" -> 2L, s"a$emoji" -> 2L), 8))
+  }
+
+  test("tok3 runs a bounded number of Spark jobs, independent of the merge count") {
+    TextOps.tok3BpeTrain(spark, sf).collect() // warm the session's caches
+    val jobs = jobsDuring { TextOps.tok3BpeTrain(spark, sf).collect() }
+    // the one word-count pass; every merge step runs on the driver
+    assert(jobs <= 4, s"tok3 ran $jobs Spark jobs")
   }
 
   test("tok4 totals are consistent: n_bpe_tokens between n_words and raw char count") {

@@ -22,6 +22,27 @@ object TestSpark {
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Spark jobs started while `body` runs. The listener bus is drained
+    * before the listener is added (earlier jobs' events stay out) and
+    * after `body` (all of its jobs' events are in). */
+  def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.TestBusDrain(sc)
+    sc.addSparkListener(l)
+    try {
+      body
+      org.apache.spark.TestBusDrain(sc)
+      n.get()
+    } finally sc.removeSparkListener(l)
+  }
 }
 
 class EntrySmokeSpec extends AnyFunSuite {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{Similarity, TextOps}
 
@@ -16,28 +15,6 @@ import graft.ops.{Similarity, TextOps}
   * retrain rather than serve a model trained under defaults. */
 class ModelRegistrySpec extends AnyFunSuite {
   import TestSpark._
-
-  /** count Spark jobs started while `body` runs; listener delivery is
-    * async, so poll until the count stabilizes */
-  private def jobsDuring(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      var prev = -1
-      var cur = n.get()
-      var spins = 0
-      while (cur != prev && spins < 50) {
-        Thread.sleep(200); prev = cur; cur = n.get(); spins += 1
-      }
-      cur
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
@@ -63,13 +40,16 @@ class ModelRegistrySpec extends AnyFunSuite {
     graft.ops.Model.release()
     TextOps.resetModelRegistry()
     // production order: train (tok3), then encode (tok4)
-    TextOps.tok3BpeTrain(spark, sf).collect()
+    val trainJobs = jobsDuring { TextOps.tok3BpeTrain(spark, sf).collect() }
     var viaRegistry: Seq[String] = null
     val warmJobs = jobsDuring { viaRegistry = rows(TextOps.tok4BpeEncode(spark, sf)) }
     graft.ops.Model.release()
     assert(viaRegistry === cold)
-    assert(warmJobs <= coldJobs - 3,
-      s"expected tok4 after tok3 to skip BPE training jobs (cold=$coldJobs warm=$warmJobs)")
+    // cold = a training run + the encode; a registry hit must skip
+    // every job of that training run, measured rather than assumed
+    assert(trainJobs >= 1, s"a training run must run the word count (ran $trainJobs jobs)")
+    assert(warmJobs <= coldJobs - trainJobs,
+      s"expected tok4 after tok3 to skip BPE training jobs (cold=$coldJobs warm=$warmJobs train=$trainJobs)")
   }
 
   test("IVF registry is conf-keyed: forcing the sizing confs retrains") {

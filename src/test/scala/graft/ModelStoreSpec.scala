@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{ModelStore, Similarity, TextOps}
 
@@ -13,24 +12,6 @@ import graft.ops.{ModelStore, Similarity, TextOps}
   * point of the store). */
 class ModelStoreSpec extends AnyFunSuite {
   import TestSpark._
-
-  private def jobsDuring(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      var prev = -1; var cur = n.get(); var spins = 0
-      while (cur != prev && spins < 50) {
-        Thread.sleep(200); prev = cur; cur = n.get(); spins += 1
-      }
-      cur
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
@@ -48,8 +29,8 @@ class ModelStoreSpec extends AnyFunSuite {
     val serveJobs = jobsDuring { served = rows(TextOps.tok4BpeEncode(spark, sf)) }
     graft.ops.Model.release()
     assert(served === trained)
-    // a cold tok4 runs 1 (word count) + 8x2-ish training jobs before
-    // the encode; served-from-store must be encode-only
+    // a cold tok4 runs the training word count's jobs before the
+    // encode; served-from-store must be encode-only
     assert(serveJobs <= 4,
       s"expected a stored model to serve without training jobs, ran $serveJobs")
   }
